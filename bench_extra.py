@@ -80,9 +80,9 @@ def clean_decomposition() -> None:
     from pyspark.sql import functions as F
 
     from hidden_characters_detector_spark.functions import kernel
+    from hidden_characters_detector_spark.functions.codec import list_to_flat
     from hidden_characters_detector_spark.functions.kernel import FULL_CLEAN
-    from hidden_characters_detector_spark.operators.clean import (
-        _flat_tokens, clean_detect)
+    from hidden_characters_detector_spark.operators.clean import clean_detect
 
     spark = bench.build_spark(bench.CPUS)
     try:
@@ -105,7 +105,7 @@ def clean_decomposition() -> None:
         def co_run(batches: Iterator[pa.RecordBatch]
                    ) -> Iterator[pa.RecordBatch]:
             for batch in batches:
-                toks, offsets = _flat_tokens(batch.column("tokens"))
+                toks, offsets = list_to_flat(batch.column("tokens"))
                 res = kernel.clean_flat(toks, offsets, FULL_CLEAN)
                 yield pa.RecordBatch.from_arrays(
                     [batch.column(c) for c in passthrough]

@@ -14,6 +14,10 @@ Two operators:
 * :func:`detect_events` — detection-event rows (MarkerReport analog,
   ref :524-532), emitted directly from the kernel masks with Arrow ``take``
   fan-out; no intermediate nested lists, no ``explode`` shuffle.
+
+Their text-corpus twins :func:`clean_documents` and :func:`document_events`
+share the same core and differ only in decoding ``string`` rows instead of
+token lists (:mod:`..functions.codec`).
 """
 
 from __future__ import annotations
@@ -25,108 +29,144 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from .. import markers as mk
 from ..functions import kernel
+from ..functions.codec import (flat_to_list, flat_to_strings, list_to_flat,
+                               strings_to_flat)
 from ..functions.kernel import DetectorConfig, FULL_CLEAN
 
-_TOKEN_T = pa.int32()
+_COUNTER_COLS = (("n_tok_clean", "int"), ("n_detected", "int"),
+                 ("n_processed", "int"), ("had_marker", "boolean"),
+                 ("n_hidden", "int"), ("n_ivs", "int"), ("n_typo", "int"))
+CLEAN_OUTPUT_COLS = ("tokens_clean",) + tuple(n for n, _ in _COUNTER_COLS)
+
+EVENT_COL_TYPES = (("line_no", "int"), ("idx", "int"), ("token", "int"),
+                   ("marker_type", "string"), ("description", "string"),
+                   ("action", "string"), ("replacement", "array<int>"))
+
+# code -> name lookup arrays, applied with vectorized Arrow `take`
+_TYPE_LUT = pa.array([None] + [kernel.TYPE_NAMES[i] for i in (1, 2, 3)],
+                     type=pa.string())
+_ACT_LUT = pa.array([None] + [kernel.ACTION_NAMES[i] for i in (1, 2, 3, 4, 5)],
+                    type=pa.string())
+_DESC_LUT = pa.array(kernel.DESC_STRINGS, type=pa.string())
 
 
-def _flat_tokens(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """ListArray -> (flat values int64, offsets int64), slice- and null-safe.
-
-    NULL token lists count as empty (``flatten()`` already skips null slots,
-    so filling their lengths with 0 keeps offsets aligned with the values).
-    """
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    lengths_arr = col.value_lengths()
-    if lengths_arr.null_count:
-        import pyarrow.compute as pc
-        lengths_arr = pc.fill_null(lengths_arr, 0)
-    lengths = lengths_arr.to_numpy(zero_copy_only=False)
-    offsets = np.concatenate([[0], np.cumsum(lengths, dtype=np.int64)])
-    values = col.flatten().to_numpy(zero_copy_only=False)  # native int32
-    return values, offsets
+def _passthrough(df: DataFrame, col: str, keep: list[str] | None = None
+                 ) -> list[tuple[str, str]]:
+    """(name, type) of the passthrough columns: schema order, without the
+    input ``col``, filtered by ``keep``.  The DDL and the output arrays
+    both follow this one list, so they cannot disagree on column order."""
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields
+            if f.name != col and (keep is None or f.name in keep)]
 
 
-def _list_array(values: np.ndarray, offsets: np.ndarray) -> pa.ListArray:
-    if offsets[-1] >= 2**31:
-        # pa.ListArray requires int32 offsets; Spark's Arrow batches are
-        # bounded by maxRecordsPerBatch well below this — reaching it means
-        # the batch size config is broken, so fail loudly instead of
-        # emitting a large_list that wouldn't match the declared schema.
-        raise ValueError(
-            f"Arrow batch too large for list<int32> offsets "
-            f"({int(offsets[-1])} values); lower "
-            "spark.sql.execution.arrow.maxRecordsPerBatch")
-    return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-        pa.array(values).cast(_TOKEN_T))
+def _ddl(cols: list[tuple[str, str]]) -> str:
+    return ", ".join(f"{n} {t}" for n, t in cols)
 
 
-CLEAN_OUTPUT_COLS = ("tokens_clean", "n_tok_clean", "n_detected",
-                     "n_processed", "had_marker", "n_hidden", "n_ivs",
-                     "n_typo")
+def _counters(res) -> list[pa.Array]:
+    """Arrays for :data:`_COUNTER_COLS`, in that order."""
+    return [pa.array(np.diff(res.out_offsets), type=pa.int32()),
+            pa.array(res.n_detected, type=pa.int32()),
+            pa.array(res.n_processed, type=pa.int32()),
+            pa.array(res.had_marker, type=pa.bool_()),
+            pa.array(res.n_hidden, type=pa.int32()),
+            pa.array(res.n_ivs, type=pa.int32()),
+            pa.array(res.n_typo, type=pa.int32())]
 
 
 def clean_schema(df: DataFrame) -> str:
     """Output DDL: input columns (tokens replaced by cleaned) + counters."""
-    keep = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            if f.name != "tokens"]
-    return ", ".join(keep + [
-        "tokens_clean array<int>", "n_tok_clean int", "n_detected int",
-        "n_processed int", "had_marker boolean", "n_hidden int",
-        "n_ivs int", "n_typo int"])
+    return _ddl(_passthrough(df, "tokens") + [("tokens_clean", "array<int>")]
+                + list(_COUNTER_COLS))
 
 
 def clean_detect(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN) -> DataFrame:
     """Clean + per-sequence stats; Arrow-batched, passthrough other columns."""
-    passthrough = [f.name for f in df.schema.fields if f.name != "tokens"]
+    passthrough = [n for n, _ in _passthrough(df, "tokens")]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            toks, offsets = _flat_tokens(batch.column("tokens"))
+            toks, offsets = list_to_flat(batch.column("tokens"))
             res = kernel.clean_flat(toks, offsets, cfg)
-            arrays = [batch.column(c) for c in passthrough]
-            arrays += [
-                _list_array(res.out_tokens, res.out_offsets),
-                pa.array(np.diff(res.out_offsets), type=pa.int32()),
-                pa.array(res.n_detected, type=pa.int32()),
-                pa.array(res.n_processed, type=pa.int32()),
-                pa.array(res.had_marker, type=pa.bool_()),
-                pa.array(res.n_hidden, type=pa.int32()),
-                pa.array(res.n_ivs, type=pa.int32()),
-                pa.array(res.n_typo, type=pa.int32()),
-            ]
+            arrays = [batch.column(c) for c in passthrough] + [
+                flat_to_list(res.out_tokens, res.out_offsets)] + _counters(res)
             yield pa.RecordBatch.from_arrays(
                 arrays, names=passthrough + list(CLEAN_OUTPUT_COLS))
 
     return df.mapInArrow(run, clean_schema(df))
 
 
-EVENT_COL_TYPES = (("line_no", "int"), ("idx", "int"), ("token", "int"),
-                   ("marker_type", "string"), ("description", "string"),
-                   ("action", "string"), ("replacement", "array<int>"))
-EVENT_SCHEMA_SUFFIX = ", ".join(f"{n} {t}" for n, t in EVENT_COL_TYPES)
-
-
-def _event_cols(event_cols: list[str] | None) -> list[str]:
-    names = [n for n, _ in EVENT_COL_TYPES]
+def _event_types(event_cols: list[str] | None) -> list[tuple[str, str]]:
     if event_cols is None:
-        return names
-    unknown = set(event_cols) - set(names)
+        return list(EVENT_COL_TYPES)
+    unknown = set(event_cols) - {n for n, _ in EVENT_COL_TYPES}
     if unknown:
         raise ValueError(f"unknown event columns: {sorted(unknown)}")
-    return [n for n in names if n in event_cols]
+    return [(n, t) for n, t in EVENT_COL_TYPES if n in event_cols]
 
 
 def event_schema(df: DataFrame, keep: list[str] | None = None,
                  event_cols: list[str] | None = None) -> str:
-    cols = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            if f.name != "tokens" and (keep is None or f.name in keep)]
-    want = set(_event_cols(event_cols))
-    return ", ".join(cols + [f"{n} {t}" for n, t in EVENT_COL_TYPES
-                             if n in want])
+    return _ddl(_passthrough(df, "tokens", keep) + _event_types(event_cols))
+
+
+def _replacements(res) -> pa.ListArray:
+    """replacement col: [] for removals/BOM, codepoints for Replaced,
+    null for detect-only (mirrors ref :532 Optional)."""
+    acts, toks = res.ev_action, res.ev_token
+    replaced = acts == kernel.ACT_REPLACED
+    lens = np.where(replaced, kernel.REPL_LEN_LUT[toks], 0).astype(np.int64)
+    cum = np.concatenate([[0], np.cumsum(lens)])
+    flat = np.empty(int(cum[-1]), dtype=np.int64)
+    rp = np.nonzero(replaced)[0]
+    if rp.size:
+        starts = cum[rp]
+        ridx, rl = kernel.REPL_IDX_LUT[toks[rp]], lens[rp]
+        for k in range(mk.MAX_REPLACEMENT_LEN):
+            sel = rl > k
+            flat[starts[sel] + k] = kernel.REPL_FLAT[ridx[sel] + k]
+    return flat_to_list(flat, cum, mask=acts == kernel.ACT_DETECTED)
+
+
+_EVENT_BUILDERS = {
+    "line_no": lambda res: pa.array(res.ev_line_no, type=pa.int32()),
+    "idx": lambda res: pa.array(res.ev_idx, type=pa.int32()),
+    "token": lambda res: pa.array(res.ev_token, type=pa.int32()),
+    "marker_type": lambda res: _TYPE_LUT.take(
+        pa.array(res.ev_type.astype(np.int64))),
+    "description": lambda res: _DESC_LUT.take(pa.array(
+        kernel.DESC_IDX_LUT[res.ev_token].astype(np.int64))),
+    "action": lambda res: _ACT_LUT.take(
+        pa.array(res.ev_action.astype(np.int64))),
+    "replacement": _replacements,
+}
+
+
+def _events(df: DataFrame, col: str, decode, cfg: DetectorConfig,
+            keep: list[str] | None, event_cols: list[str] | None
+            ) -> DataFrame:
+    """Event rows for the ``col`` rows that ``decode`` turns into
+    (flat tokens, offsets); see :func:`detect_events`."""
+    fields = _passthrough(df, col, keep)
+    passthrough = [n for n, _ in fields]
+    ev_types = _event_types(event_cols)
+    ev_names = [n for n, _ in ev_types]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            toks, offsets = decode(batch.column(col))
+            res = kernel.clean_flat(toks, offsets, cfg, emit_events=True)
+            counts = np.diff(res.ev_offsets)
+            row_idx = np.repeat(np.arange(len(counts)), counts)
+            take = pa.array(row_idx, type=pa.int64())
+            arrays = [batch.column(c).take(take) for c in passthrough]
+            arrays += [_EVENT_BUILDERS[n](res) for n in ev_names]
+            yield pa.RecordBatch.from_arrays(
+                arrays, names=passthrough + ev_names)
+
+    return df.mapInArrow(run, _ddl(fields + ev_types))
 
 
 def detect_events(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN, *,
@@ -141,64 +181,7 @@ def detect_events(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN, *,
     Replacement column carries the applied replacement codepoints (empty for
     removals, null when no replacement applied — mirrors ref :532 Optional).
     """
-    passthrough = [f.name for f in df.schema.fields
-                   if f.name != "tokens" and (keep is None or f.name in keep)]
-    ev_names = _event_cols(event_cols)
-    # code -> name lookup arrays, applied with vectorized Arrow `take`
-    type_lut = pa.array([None] + [kernel.TYPE_NAMES[i] for i in (1, 2, 3)],
-                        type=pa.string())
-    act_lut = pa.array(
-        [None] + [kernel.ACTION_NAMES[i] for i in (1, 2, 3, 4, 5)],
-        type=pa.string())
-    desc_lut = pa.array(kernel.DESC_STRINGS, type=pa.string())
-    from .. import markers as mk
-
-    def _replacements(res) -> pa.ListArray:
-        """replacement col: [] for removals/BOM, codepoints for Replaced,
-        null for detect-only (mirrors ref :532 Optional)."""
-        acts, toks = res.ev_action, res.ev_token
-        replaced = acts == kernel.ACT_REPLACED
-        lens = np.where(replaced, kernel.REPL_LEN_LUT[toks], 0).astype(np.int64)
-        cum = np.concatenate([[0], np.cumsum(lens)])
-        flat = np.empty(int(cum[-1]), dtype=np.int64)
-        rp = np.nonzero(replaced)[0]
-        if rp.size:
-            starts = cum[rp]
-            ridx, rl = kernel.REPL_IDX_LUT[toks[rp]], lens[rp]
-            for k in range(mk.MAX_REPLACEMENT_LEN):
-                sel = rl > k
-                flat[starts[sel] + k] = kernel.REPL_FLAT[ridx[sel] + k]
-        is_null = acts == kernel.ACT_DETECTED
-        return pa.ListArray.from_arrays(
-            pa.array(cum, type=pa.int64()).cast(pa.int32()),
-            pa.array(flat, type=pa.int64()).cast(_TOKEN_T),
-            mask=pa.array(is_null))
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            toks, offsets = _flat_tokens(batch.column("tokens"))
-            res = kernel.clean_flat(toks, offsets, cfg, emit_events=True)
-            counts = np.diff(res.ev_offsets)
-            row_idx = np.repeat(np.arange(len(counts)), counts)
-            take = pa.array(row_idx, type=pa.int64())
-            arrays = [batch.column(c).take(take) for c in passthrough]
-            builders = {
-                "line_no": lambda: pa.array(res.ev_line_no, type=pa.int32()),
-                "idx": lambda: pa.array(res.ev_idx, type=pa.int32()),
-                "token": lambda: pa.array(res.ev_token, type=pa.int32()),
-                "marker_type": lambda: type_lut.take(
-                    pa.array(res.ev_type.astype(np.int64))),
-                "description": lambda: desc_lut.take(pa.array(
-                    kernel.DESC_IDX_LUT[res.ev_token].astype(np.int64))),
-                "action": lambda: act_lut.take(
-                    pa.array(res.ev_action.astype(np.int64))),
-                "replacement": lambda: _replacements(res),
-            }
-            arrays += [builders[n]() for n in ev_names]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=passthrough + ev_names)
-
-    return df.mapInArrow(run, event_schema(df, keep, event_cols))
+    return _events(df, "tokens", list_to_flat, cfg, keep, event_cols)
 
 
 def clean_documents(df: DataFrame, text_col: str = "text",
@@ -210,45 +193,24 @@ def clean_documents(df: DataFrame, text_col: str = "text",
     tokenize → clean_detect → detokenize chain — one serialization of the
     corpus instead of three).
     """
-    from ..sources.synth import flat_tokens_to_strings, strings_to_flat_tokens
-
-    keep = [f.name for f in df.schema.fields if f.name != text_col] \
-        if keep is None else keep
-    kept_ddl = [f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields if f.name in keep]
-    out_cols = (["text_clean string"] if emit_text
-                else ["tokens_clean array<int>"])
-    ddl = ", ".join(kept_ddl + out_cols + [
-        "n_tok int", "n_tok_clean int", "n_detected int",
-        "n_processed int", "had_marker boolean", "n_hidden int",
-        "n_ivs int", "n_typo int"])
+    fields = _passthrough(df, text_col, keep)
+    payload = (("text_clean", "string") if emit_text
+               else ("tokens_clean", "array<int>"))
+    encode = flat_to_strings if emit_text else flat_to_list
+    cols = fields + [payload, ("n_tok", "int")] + list(_COUNTER_COLS)
+    passthrough = [n for n, _ in fields]
+    names = [n for n, _ in cols]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            flat, offsets = strings_to_flat_tokens(batch.column(text_col))
+            flat, offsets = strings_to_flat(batch.column(text_col))
             res = kernel.clean_flat(flat, offsets, cfg)
-            if emit_text:
-                payload = [flat_tokens_to_strings(res.out_tokens,
-                                                  res.out_offsets)]
-            else:
-                payload = [_list_array(res.out_tokens, res.out_offsets)]
-            arrays = [batch.column(c) for c in keep] + payload + [
-                pa.array(np.diff(offsets), type=pa.int32()),
-                pa.array(np.diff(res.out_offsets), type=pa.int32()),
-                pa.array(res.n_detected, type=pa.int32()),
-                pa.array(res.n_processed, type=pa.int32()),
-                pa.array(res.had_marker, type=pa.bool_()),
-                pa.array(res.n_hidden, type=pa.int32()),
-                pa.array(res.n_ivs, type=pa.int32()),
-                pa.array(res.n_typo, type=pa.int32()),
-            ]
-            names = keep + (["text_clean"] if emit_text
-                            else ["tokens_clean"]) + [
-                "n_tok", "n_tok_clean", "n_detected", "n_processed",
-                "had_marker", "n_hidden", "n_ivs", "n_typo"]
+            arrays = [batch.column(c) for c in passthrough] + [
+                encode(res.out_tokens, res.out_offsets),
+                pa.array(np.diff(offsets), type=pa.int32())] + _counters(res)
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return df.mapInArrow(run, ddl)
+    return df.mapInArrow(run, _ddl(cols))
 
 
 def document_events(df: DataFrame, text_col: str = "text",
@@ -257,64 +219,4 @@ def document_events(df: DataFrame, text_col: str = "text",
                     event_cols: list[str] | None = None) -> DataFrame:
     """FUSED text-corpus event emitter: string -> tokens -> events in one
     Arrow pass (vs tokenize → detect_events)."""
-    from ..sources.synth import strings_to_flat_tokens
-
-    keep = [f.name for f in df.schema.fields if f.name != text_col] \
-        if keep is None else keep
-    ev_names = _event_cols(event_cols)
-    want = set(ev_names)
-    kept_ddl = [f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields if f.name in keep]
-    ddl = ", ".join(kept_ddl + [f"{n} {t}" for n, t in EVENT_COL_TYPES
-                                if n in want])
-    type_lut = pa.array([None] + [kernel.TYPE_NAMES[i] for i in (1, 2, 3)],
-                        type=pa.string())
-    act_lut = pa.array(
-        [None] + [kernel.ACTION_NAMES[i] for i in (1, 2, 3, 4, 5)],
-        type=pa.string())
-    desc_lut = pa.array(kernel.DESC_STRINGS, type=pa.string())
-    from .. import markers as mk
-
-    def _repls(res) -> pa.ListArray:
-        acts, toks = res.ev_action, res.ev_token
-        replaced = acts == kernel.ACT_REPLACED
-        lens = np.where(replaced, kernel.REPL_LEN_LUT[toks], 0).astype(
-            np.int64)
-        cum = np.concatenate([[0], np.cumsum(lens)])
-        flat = np.empty(int(cum[-1]), dtype=np.int64)
-        rp = np.nonzero(replaced)[0]
-        if rp.size:
-            starts, ridx = cum[rp], kernel.REPL_IDX_LUT[toks[rp]]
-            rl = lens[rp]
-            for k in range(mk.MAX_REPLACEMENT_LEN):
-                sel = rl > k
-                flat[starts[sel] + k] = kernel.REPL_FLAT[ridx[sel] + k]
-        return pa.ListArray.from_arrays(
-            pa.array(cum, type=pa.int64()).cast(pa.int32()),
-            pa.array(flat, type=pa.int64()).cast(_TOKEN_T),
-            mask=pa.array(acts == kernel.ACT_DETECTED))
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            flat, offsets = strings_to_flat_tokens(batch.column(text_col))
-            res = kernel.clean_flat(flat, offsets, cfg, emit_events=True)
-            counts = np.diff(res.ev_offsets)
-            take = pa.array(np.repeat(np.arange(len(counts)), counts),
-                            type=pa.int64())
-            builders = {
-                "line_no": lambda: pa.array(res.ev_line_no, type=pa.int32()),
-                "idx": lambda: pa.array(res.ev_idx, type=pa.int32()),
-                "token": lambda: pa.array(res.ev_token, type=pa.int32()),
-                "marker_type": lambda: type_lut.take(
-                    pa.array(res.ev_type.astype(np.int64))),
-                "description": lambda: desc_lut.take(pa.array(
-                    kernel.DESC_IDX_LUT[res.ev_token].astype(np.int64))),
-                "action": lambda: act_lut.take(
-                    pa.array(res.ev_action.astype(np.int64))),
-                "replacement": lambda: _repls(res),
-            }
-            arrays = [batch.column(c).take(take) for c in keep] \
-                + [builders[n]() for n in ev_names]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep + ev_names)
-
-    return df.mapInArrow(run, ddl)
+    return _events(df, text_col, strings_to_flat, cfg, keep, event_cols)

@@ -37,7 +37,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.synth import strings_to_flat_tokens
+from ..functions.codec import strings_to_flat
 
 _M61 = np.uint64((1 << 61) - 1)
 _HASH_BASE = np.uint64(1099511628211)
@@ -76,17 +76,17 @@ def _flat_shingle_hashes(texts: pa.Array, k: int
     computed over the whole batch's concatenated codepoints; window starts
     that would cross a document boundary are simply not gathered.
     """
-    flat, offsets = strings_to_flat_tokens(texts)
-    return _rolling_hashes(flat.astype(np.uint64), offsets, k)
+    return _rolling_hashes(*strings_to_flat(texts), k)
 
 
 def _rolling_hashes(cps: np.ndarray, offsets: np.ndarray, k: int
                     ) -> tuple[np.ndarray, np.ndarray]:
-    """Core of :func:`_flat_shingle_hashes` over an already-flat uint64
+    """Core of :func:`_flat_shingle_hashes` over an already-flat integer
     value array + row offsets — shared by the text path (codepoints from
     strings) and the token-table path (the ``tokens`` arrays ARE the
     codepoints, so both paths produce identical hashes for equal
     content)."""
+    cps = cps.astype(np.uint64, copy=False)
     n = cps.size
     lens = np.diff(offsets)
     out_lens = np.maximum(lens - k + 1, 0)

@@ -96,8 +96,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..sources.synth import flat_tokens_to_strings, strings_to_flat_tokens
-from .clean import _flat_tokens
+from ..functions.codec import flat_to_strings, list_to_flat, strings_to_flat
 from .dedup import _rolling_hashes
 
 
@@ -203,7 +202,7 @@ def position_hashes(df: DataFrame, text_col: str = "text",
     (see :func:`_position_rows`)."""
     return _position_rows(
         df, text_col, id_col,
-        lambda c: _rolling_hashes(*_text_flat(c), k), winnow)
+        lambda c: _rolling_hashes(*strings_to_flat(c), k), winnow)
 
 
 def token_position_hashes(df: DataFrame, tokens_col: str = "tokens",
@@ -215,17 +214,7 @@ def token_position_hashes(df: DataFrame, tokens_col: str = "tokens",
     (parity-tested)."""
     return _position_rows(
         df, tokens_col, id_col,
-        lambda c: _rolling_hashes(*_list_flat_u64(c), k), winnow)
-
-
-def _text_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    flat, off = strings_to_flat_tokens(col)
-    return flat.astype(np.uint64), off
-
-
-def _list_flat_u64(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    values, off = _flat_tokens(col)
-    return values.astype(np.uint64), off
+        lambda c: _rolling_hashes(*list_to_flat(c), k), winnow)
 
 
 def _merge_spans(marked: DataFrame, id_col: str, k: int) -> DataFrame:
@@ -352,7 +341,7 @@ def remove_duplicated_spans(df: DataFrame, text_col: str = "text",
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             texts = batch.column(text_col)
-            flat, off = strings_to_flat_tokens(texts)
+            flat, off = strings_to_flat(texts)
             sp = batch.column(len(names))  # _spans: list<struct<s,e>>
             sp_lens = sp.value_lengths().fill_null(0).to_numpy(
                 zero_copy_only=False).astype(np.int64)
@@ -383,7 +372,7 @@ def remove_duplicated_spans(df: DataFrame, text_col: str = "text",
                                        minlength=nrows).astype(np.int64)
             new_off = np.concatenate(
                 [[0], np.cumsum(kept_per_row, dtype=np.int64)])
-            out = flat_tokens_to_strings(flat[keep], new_off)
+            out = flat_to_strings(flat[keep], new_off)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(i) for i in range(len(names))] + [out],
                 names=names + [out_col])

@@ -2,9 +2,9 @@
 
 The engine's native input is ``tokens: array<int32>`` (BASELINE.json
 ``input_hint``); these operators bridge string corpora (the driver's
-``documents`` table) into that model and back, using the UTF-32 bulk
-encode/decode trick from :mod:`..sources.synth` — one encode per Arrow
-batch, no per-row Python in the conversion hot path.
+``documents`` table) into that model and back through the token-list
+codec (:mod:`..functions.codec`) — one encode per Arrow batch, no per-row
+Python in the conversion hot path.
 """
 
 from __future__ import annotations
@@ -16,7 +16,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..sources.synth import flat_tokens_to_strings, strings_to_flat_tokens
+from ..functions.codec import (flat_to_list, flat_to_strings, list_to_flat,
+                               strings_to_flat)
 
 
 def tokenize(df: DataFrame, text_col: str = "text",
@@ -29,12 +30,10 @@ def tokenize(df: DataFrame, text_col: str = "text",
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            flat, offsets = strings_to_flat_tokens(batch.column(text_col))
-            toks = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-                pa.array(flat, type=pa.int64()).cast(pa.int32()))
+            flat, offsets = strings_to_flat(batch.column(text_col))
             arrays = [batch.column(c) for c in keep] + [
-                toks, pa.array(np.diff(offsets), type=pa.int32())]
+                flat_to_list(flat, offsets),
+                pa.array(np.diff(offsets), type=pa.int32())]
             yield pa.RecordBatch.from_arrays(
                 arrays, names=keep + [out_col, "n_tok"])
 
@@ -52,13 +51,7 @@ def detokenize(df: DataFrame, list_col: str = "tokens_clean",
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            col = batch.column(list_col)
-            lengths = col.value_lengths().to_numpy(zero_copy_only=False)
-            offsets = np.concatenate([[0], np.cumsum(lengths,
-                                                     dtype=np.int64)])
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False)
-            texts = flat_tokens_to_strings(flat, offsets)
+            texts = flat_to_strings(*list_to_flat(batch.column(list_col)))
             arrays = [batch.column(c) for c in keep] + [texts]
             yield pa.RecordBatch.from_arrays(arrays, names=keep + [out_col])
 

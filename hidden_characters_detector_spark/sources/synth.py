@@ -7,9 +7,8 @@ that table from the driver's ``documents.parquet`` text — seeded (default 42),
 partition-order independent (every decision is a pure function of doc_id and
 token position), no external data.
 
-Text <-> token conversion is vectorized via the UTF-32 trick: a whole Arrow
-batch of strings is joined, encoded to ``utf-32-le`` and reinterpreted as one
-``uint32`` numpy array (and back), so there is no per-row Python.
+Text -> token conversion is the vectorized codec's
+(:func:`..functions.codec.strings_to_flat`), so there is no per-row Python.
 
 Marker injection mirrors FIXTURES.md's pattern matrix: a deterministic
 per-token hash decides injection points; injected codepoints are drawn from a
@@ -28,6 +27,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.codec import flat_to_list, strings_to_flat
+
+strings_to_flat_tokens = strings_to_flat  # the name perfbench/inputs.py uses
 
 # every marker family is represented (SURVEY.md §2.2 families + dead rules)
 INJECT_POOL = np.array(
@@ -58,32 +61,6 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     x ^= x >> np.uint64(27)
     x = (x * np.uint64(0x94D049BB133111EB)).astype(np.uint64)
     return x ^ (x >> np.uint64(31))
-
-
-def strings_to_flat_tokens(texts: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Arrow string array -> (flat codepoints int64, offsets int64).
-
-    NULL text values are treated as empty strings (explicit fill at the
-    operator boundary, so a null row can't crash the whole job with an
-    opaque ``TypeError`` from ``str.join``).
-    """
-    if texts.null_count:
-        texts = pc.fill_null(texts, "")
-    joined = "".join(texts.to_pylist())  # single allocation per batch
-    flat = np.frombuffer(joined.encode("utf-32-le"), dtype="<u4").astype(
-        np.int64)
-    lens = pc.utf8_length(texts).to_numpy(zero_copy_only=False)
-    offsets = np.concatenate([[0], np.cumsum(lens, dtype=np.int64)])
-    return flat, offsets
-
-
-def flat_tokens_to_strings(flat: np.ndarray, offsets: np.ndarray) -> pa.Array:
-    """(flat codepoints, offsets) -> Arrow string array, vectorized."""
-    joined = np.ascontiguousarray(flat, dtype="<u4").tobytes().decode(
-        "utf-32-le")
-    # slice the single decoded string back into rows by codepoint offsets
-    return pa.array([joined[offsets[i]:offsets[i + 1]]
-                     for i in range(len(offsets) - 1)], type=pa.string())
 
 
 def inject_flat(flat: np.ndarray, offsets: np.ndarray, doc_seed: np.ndarray,
@@ -158,7 +135,7 @@ def token_table(spark: SparkSession, sf_dir: str, inject: bool = True,
         for batch in batches:
             ids = batch.column("doc_id").to_numpy(
                 zero_copy_only=False).astype(np.uint64)
-            flat, offsets = strings_to_flat_tokens(batch.column("text"))
+            flat, offsets = strings_to_flat(batch.column("text"))
             doc_seed = _mix64(ids + np.uint64(seed))
             if inject:
                 flat, offsets = inject_flat(flat, offsets, doc_seed,
@@ -173,11 +150,8 @@ def token_table(spark: SparkSession, sf_dir: str, inject: bool = True,
             doc_id_str = pc.binary_join_element_wise(
                 "doc", pc.cast(batch.column("doc_id"), pa.string()),
                 "")
-            tok_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-                pa.array(flat, type=pa.int64()).cast(pa.int32()))
             yield pa.RecordBatch.from_arrays(
-                [doc_id_str, tok_arr,
+                [doc_id_str, flat_to_list(flat, offsets),
                  pa.array(np.diff(offsets), type=pa.int32()), src,
                  pa.array(ev, type=pa.timestamp("us"))],
                 names=["doc_id", "tokens", "n_tok", "source", "event_time"])
@@ -208,7 +182,7 @@ def rate_token_stream(spark: SparkSession, *, rows_per_second: int = 100,
                 zero_copy_only=False).astype(np.uint64)
             texts = pa.array([base + str(v) for v in vals.tolist()],
                              type=pa.string())
-            flat, offsets = strings_to_flat_tokens(texts)
+            flat, offsets = strings_to_flat(texts)
             doc_seed = _mix64(vals + np.uint64(seed))
             flat, offsets = inject_flat(flat, offsets, doc_seed,
                                         rate=rate, seed=seed)
@@ -218,9 +192,7 @@ def rate_token_stream(spark: SparkSession, *, rows_per_second: int = 100,
             yield pa.RecordBatch.from_arrays(
                 [pa.array([f"rate{v}" for v in vals.tolist()],
                           type=pa.string()),
-                 pa.ListArray.from_arrays(
-                     pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-                     pa.array(flat, type=pa.int64()).cast(pa.int32())),
+                 flat_to_list(flat, offsets),
                  pa.array(np.diff(offsets), type=pa.int32()),
                  pa.array(np.asarray(SOURCES, dtype=object)[src_idx],
                           type=pa.string()),

@@ -269,6 +269,42 @@ def _source_wal_files(spark: SparkSession, checkpoint_dir: str,
         "source index); refusing to silently drop quarantined rows")
 
 
+def _ingest_gate(df: DataFrame, decontam_eval, decontam_k: int,
+                 history_bloom: tuple[bytes, int, int] | None, *,
+                 observe: bool = True) -> DataFrame:
+    """Drop the rows the ingestion policy keeps out of every sink.
+
+    ``decontam_eval`` (from ``decontam.build_eval_filter``) drops rows
+    sharing a ``decontam_k``-gram with the eval set.  ``history_bloom``
+    (``(bits, m, k)`` from ``bloom.bloom_build`` keyed on ``cast(tokens
+    as string)``) drops sequences already in the PREVIOUS snapshot, which
+    ``dropDuplicatesWithinWatermark`` cannot see; a false positive drops
+    a novel row, the safe direction.  Both gates are stateless, so they
+    drop into a stream unchanged.  With ``observe`` the drop counts
+    surface per batch as the ``decontam_metrics`` / ``history_metrics``
+    observed metrics, so rows never vanish unexplained.
+    """
+    if decontam_eval is not None:
+        from ..operators.decontam import mark_contaminated
+        df = mark_contaminated(df, decontam_eval, k=decontam_k)
+        if observe:
+            df = df.observe("decontam_metrics",
+                            F.sum(F.col("contaminated").cast("long"))
+                            .alias("n_contaminated"))
+        df = df.where(~F.col("contaminated")).drop("contaminated")
+    if history_bloom is not None:
+        from ..operators.bloom import bloom_might_contain
+        h_bits, h_m, h_k = history_bloom
+        df = bloom_might_contain(df, h_bits, F.col("tokens").cast("string"),
+                                 m=h_m, k=h_k, out_col="__in_history")
+        if observe:
+            df = df.observe("history_metrics",
+                            F.sum(F.col("__in_history").cast("long"))
+                            .alias("n_history_dropped"))
+        df = df.where(~F.col("__in_history")).drop("__in_history")
+    return df
+
+
 def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
                          checkpoint_dir: str, *,
                          cfg: DetectorConfig = FULL_CLEAN,
@@ -343,43 +379,10 @@ def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
 
     tok = read_token_stream(spark, input_path,
                             max_files_per_trigger=max_files_per_trigger)
-    if decontam_eval is not None:
-        # streaming ingestion decontamination: the broadcast eval-shingle
-        # gate (operators.decontam.mark_contaminated) is a STATELESS
-        # mapInArrow, so it drops into the stream unchanged; contaminated
-        # rows never reach the kernel or any sink, and the count surfaces
-        # as an observed metric per batch
-        from ..operators.decontam import mark_contaminated
-        marked = mark_contaminated(tok, decontam_eval, k=decontam_k)
-        marked = marked.observe(
-            "decontam_metrics",
-            F.sum(F.col("contaminated").cast("long"))
-            .alias("n_contaminated"))
-        tok = marked.where(~F.col("contaminated")).drop("contaminated")
-    if history_bloom is not None:
-        # cross-snapshot ingestion dedup: drop sequences whose token
-        # array is already in the PREVIOUS snapshot's Bloom filter
-        # (``(bits, m, k)`` from ``bloom.bloom_build`` keyed on
-        # ``cast(tokens as string)``).  Zero false negatives — nothing
-        # already trained on re-enters; false positives drop a few novel
-        # rows, the safe direction.  The probe is a stateless codegen
-        # projection (bit tests against the plan-literal bitset), so it
-        # drops into the stream unchanged; it complements
-        # ``dropDuplicatesWithinWatermark``, which bounds WITHIN-stream
-        # duplicate state but cannot see prior runs.
-        from ..operators.bloom import bloom_might_contain
-        h_bits, h_m, h_k = history_bloom
-        gated = bloom_might_contain(
-            tok, h_bits, F.col("tokens").cast("string"),
-            m=h_m, k=h_k, out_col="__in_history")
-        gated = gated.observe(
-            "history_metrics",
-            F.sum(F.col("__in_history").cast("long"))
-            .alias("n_history_dropped"))
-        tok = gated.where(~F.col("__in_history")).drop("__in_history")
+    tok = _ingest_gate(tok, decontam_eval, decontam_k, history_bloom)
     reason = F.col(QUARANTINE_REASON_COL)
     # bad rows flow through the kernel untouched: the Arrow kernel treats a
-    # NULL token list as empty (operators.clean._flat_tokens), so no
+    # NULL token list as empty (functions.codec.list_to_flat), so no
     # per-row array rewrite is needed — the reason column is the only
     # added projection, and the good-write filter drops bad rows after the
     # (for them ~free) kernel pass
@@ -414,35 +417,12 @@ def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
             raw = batch_df.sparkSession.read.schema(
                 TOKEN_STREAM_SCHEMA).parquet(*files)
             bad = with_quarantine_reason(raw).where(reason.isNotNull())
-            if decontam_eval is not None:
-                # the raw re-scan must honor the decontam gate too:
-                # without this, a row that is BOTH contaminated and
-                # quarantine-bad would land verbatim (leaked tokens and
-                # all) in the quarantine sink, breaking the "contaminated
-                # rows reach no sink" guarantee and desyncing
-                # n_quarantined from the quarantine dir's row count.
-                # Applied AFTER the (cheap codegen) bad-row filter: the
-                # rolling-hash kernel then touches only the tiny bad
-                # subset, not every raw row a second time — the filters
-                # commute, so the quarantine set is identical
-                from ..operators.decontam import mark_contaminated
-                bad = (mark_contaminated(bad, decontam_eval, k=decontam_k)
-                       .where(~F.col("contaminated"))
-                       .drop("contaminated"))
-            if history_bloom is not None:
-                # same commute argument as the decontam gate above: the
-                # stream-side history filter ran BEFORE quarantine
-                # marking, so the raw re-scan must drop in-history rows
-                # too or the quarantine dir would disagree with the
-                # n_quarantined observed metric (and resurrect rows the
-                # ingestion policy already excluded)
-                from ..operators.bloom import bloom_might_contain
-                h_bits, h_m, h_k = history_bloom
-                bad = (bloom_might_contain(
-                           bad, h_bits, F.col("tokens").cast("string"),
-                           m=h_m, k=h_k, out_col="__in_history")
-                       .where(~F.col("__in_history"))
-                       .drop("__in_history"))
+            # the gate too, or a row both gated out and bad would land
+            # verbatim in the quarantine sink.  AFTER the cheap bad-row
+            # filter (they commute), so the rolling-hash kernel sees only
+            # the bad subset; not observed, the stream already counted it
+            bad = _ingest_gate(bad, decontam_eval, decontam_k,
+                               history_bloom, observe=False)
             # ONE raw scan: write unconditionally (deterministic per batch
             # — fixed WAL file set — so the overwrite stays idempotent
             # under replay), then drop the dir again if the batch was

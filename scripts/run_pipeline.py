@@ -180,40 +180,15 @@ def main() -> None:
 
     if args.sink == "iceberg":
         # surfaces a clear error + recipe when the jars are absent
-        from pyspark.sql import functions as F
-
         from hidden_characters_detector_spark.sinks.exactly_once import (
             iceberg_sink)
         tok = pipeline.read_token_stream(
             spark, args.input,
             max_files_per_trigger=args.max_files_per_trigger)
-        if decontam_bc is not None:
-            # the gate must apply on this branch too, not silently no-op —
-            # and with the same observed drop count the single-pass
-            # pipeline surfaces, so rows never vanish unexplained
-            from hidden_characters_detector_spark.operators.decontam import (
-                mark_contaminated)
-            marked = mark_contaminated(tok, decontam_bc,
-                                       k=args.decontam_k)
-            marked = marked.observe(
-                "decontam_metrics",
-                F.sum(F.col("contaminated").cast("long"))
-                .alias("n_contaminated"))
-            tok = (marked.where(~F.col("contaminated"))
-                   .drop("contaminated"))
-        if history_bloom is not None:
-            # same no-silent-no-op rule as the decontam gate
-            from hidden_characters_detector_spark.operators.bloom import (
-                bloom_might_contain)
-            h_bits, h_m, h_k = history_bloom
-            gated = bloom_might_contain(
-                tok, h_bits, F.col("tokens").cast("string"),
-                m=h_m, k=h_k, out_col="__in_history")
-            gated = gated.observe(
-                "history_metrics",
-                F.sum(F.col("__in_history").cast("long"))
-                .alias("n_history_dropped"))
-            tok = gated.where(~F.col("__in_history")).drop("__in_history")
+        # the gate applies on this branch too, with the same observed
+        # drop counts, so rows never vanish unexplained
+        tok = pipeline._ingest_gate(tok, decontam_bc, args.decontam_k,
+                                    history_bloom)
         q = iceberg_sink(pipeline.clean_stream(tok, cfg), args.output,
                          os.path.join(args.checkpoint, "sink"),
                          trigger_available_now=args.available_now,

@@ -480,6 +480,7 @@ def test_null_rows_do_not_crash_operators(spark):
     """ADVICE: a NULL text / NULL token list must not fail the job."""
     from hidden_characters_detector_spark.operators.clean import (
         clean_detect, clean_documents)
+    from hidden_characters_detector_spark.operators.text_ops import detokenize
 
     docs = spark.createDataFrame(
         [("d1", "a​b"), ("d2", None), ("d3", "")],
@@ -498,6 +499,15 @@ def test_null_rows_do_not_crash_operators(spark):
            clean_detect(toks).collect()}
     assert got["t1"] == [A]
     assert got["t2"] == []
+
+    # one partition, so the NULL list sits mid-batch: rows after it keep
+    # their own text
+    lists = spark.createDataFrame(
+        [("l1", [104, 105]), ("l2", None), ("l3", [120, 121, 122])],
+        "doc_id string, tokens_clean array<int>").coalesce(1)
+    got = {r["doc_id"]: r["text_clean"] for r in
+           detokenize(lists).collect()}
+    assert got == {"l1": "hi", "l2": "", "l3": "xyz"}
 
 
 def test_single_pass_pipeline_continuous_trigger(spark, tmp_path):
