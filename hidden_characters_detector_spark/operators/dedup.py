@@ -44,28 +44,6 @@ _HASH_BASE = np.uint64(1099511628211)
 _U64_MAX = np.iinfo(np.uint64).max
 
 
-def _shingle_hashes(texts: list[str], k: int = 5) -> list[np.ndarray]:
-    """Per-doc arrays of DISTINCT 64-bit k-shingle hashes (char shingles).
-
-    Reference implementation (per-doc), kept ONLY for parity tests — the
-    batch hot paths (:func:`_minhash_batch`, :func:`simhash_fingerprints`,
-    :func:`_pairwise_jaccard`) all use :func:`_flat_shingle_hashes`.
-    """
-    out = []
-    for t in texts:
-        cps = np.frombuffer(t.encode("utf-32-le"), dtype="<u4").astype(
-            np.uint64)
-        if cps.size < k:
-            out.append(np.zeros(0, dtype=np.uint64))
-            continue
-        n = cps.size - k + 1
-        acc = np.zeros(n, dtype=np.uint64)
-        for j in range(k):  # k is a small constant (5)
-            acc = acc * _HASH_BASE + cps[j:j + n]
-        out.append(np.unique(acc))
-    return out
-
-
 def _flat_shingle_hashes(texts: pa.Array, k: int
                          ) -> tuple[np.ndarray, np.ndarray]:
     """All docs' k-shingle rolling hashes in ONE vectorized pass.
@@ -203,37 +181,43 @@ def _lsh_candidates(df: DataFrame, id_col: str, text_col: str, *,
                     ) -> tuple[DataFrame, DataFrame]:
     """Shared LSH core -> (candidate pairs, signature table).
 
-    The band/bucket self-join carries only ``(id, band, band_hash)`` — the
-    64-value signatures stay out of the big shuffle (re-attach them after
-    pair dedup if needed), moving ~8× fewer bytes than shipping signatures
-    through every band row.  ``materialize`` marks the signature table
-    persisted (MEMORY_AND_DISK) so the shingle/minhash kernel runs once
-    across the band branch and the signature re-attach branch (measured:
-    without it the band self-join plans the kernel twice — no
-    ReusedExchange).  Persist is lazy (no job at plan-construction time)
-    and recoverable — a lost executor recomputes the deterministic seeded
-    kernel, unlike ``localCheckpoint`` whose blocks are unrecoverable on
-    executor loss.  The cached table lives until the session ends or the
-    caller unpersists the returned ``sig`` handle; under memory pressure
-    MEMORY_AND_DISK blocks spill rather than grow the heap.  Pass
-    ``materialize=False`` to trade one extra kernel pass for zero cache
-    footprint.  At production scale the signature table is written out
-    once (its own Iceberg table) and reused; persist is the single-job
-    analog.
+    Buckets are formed by ONE aggregation on ``(band, band_hash)`` over
+    ``(id, band, band_hash)`` rows — the 64-value signatures stay out of
+    the shuffle (re-attach them after pair dedup if needed).  Each bucket
+    of ≥2 members collects its sorted id list and emits its ordered pairs
+    with JVM generators (``posexplode``, then ``explode`` of the later
+    members); ``doc_a < doc_b`` drops duplicated and equal ids (NULL ids
+    never enter ``collect_list``), and the final ``dropDuplicates`` merges
+    pairs found by several bands.  The same pair set as a band self-join,
+    but the signature kernel sits under a single subtree: a self-join
+    plans it once per join side (no ReusedExchange).
+
+    ``materialize`` marks the signature table persisted (MEMORY_AND_DISK)
+    for callers that re-attach signatures after banding
+    (:func:`minhash_lsh_pairs`), so the kernel runs once across the band
+    branch and the two re-attach branches.  Persist is lazy (no job at
+    plan-construction time) and recoverable — a lost executor recomputes
+    the deterministic seeded kernel, unlike ``localCheckpoint``.  The
+    cached table lives until the caller unpersists the returned ``sig``
+    handle.  At production scale the signature table is written out once
+    (its own Iceberg table) and reused; persist is the single-job analog.
     """
     sig = signature_index(df, id_col, text_col,
                           num_perm=num_perm, seed=seed)
     if materialize:
         sig = sig.persist()
-    banded = _band_hashes(sig, id_col, num_perm=num_perm, bands=bands)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (left.join(right,
-                      (F.col("l.band") == F.col("r.band"))
-                      & (F.col("l.band_hash") == F.col("r.band_hash"))
-                      & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-            .select(F.col(f"l.{id_col}").alias("doc_a"),
-                    F.col(f"r.{id_col}").alias("doc_b"))
+    ids = (_band_hashes(sig, id_col, num_perm=num_perm, bands=bands)
+           .groupBy("band", "band_hash")
+           .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+           .where(F.size("ids") > 1))
+    # one row per member, then one per later member: a bucket of n never
+    # builds an array longer than n (a flattened n(n-1)/2 pair array
+    # would outgrow the JVM array limit on a hot bucket)
+    cand = (ids.select("ids", F.posexplode("ids").alias("i", "doc_a"))
+            .select("doc_a", F.explode(F.slice(
+                "ids", F.col("i") + 2, F.size("ids") - F.col("i") - 1))
+                .alias("doc_b"))
+            .where(F.col("doc_a") < F.col("doc_b"))
             .dropDuplicates(["doc_a", "doc_b"]))
     return cand, sig
 
@@ -251,13 +235,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", *,
 
     Lazy by default (``materialize=False``): building the DataFrame runs
     no job and leaves no cache — the deterministic signature kernel simply
-    re-runs per branch of the plan (band self-join + the two est-Jaccard
-    re-attaches).  ``materialize=True`` is the opt-in for repeated
-    consumption: it persists the signature table so the kernel runs once,
-    EAGERLY materializes the (tiny) pair result, unpersists the signature
-    cache, and returns the persisted result — the CALLER owns that handle
-    and must ``.unpersist()`` it when done (a caller that drops it leaks
-    one small cache for the session, which is why it is not the default).
+    re-runs per branch of the plan (once in the band branch, once in the
+    est-Jaccard re-attach, whose two sides share one exchange).
+    ``materialize=True`` is the opt-in for repeated consumption: it
+    persists the signature table so the kernel runs once, EAGERLY
+    materializes the (tiny) pair result, unpersists the signature cache,
+    and returns the persisted result — the CALLER owns that handle and
+    must ``.unpersist()`` it when done (a caller that drops it leaks one
+    small cache for the session, which is why it is not the default).
     """
     cand, sig = _lsh_candidates(df, id_col, text_col, num_perm=num_perm,
                                 bands=bands, seed=seed,
@@ -576,11 +561,9 @@ def verified_near_dups(df: DataFrame, id_col: str = "doc_id",
     prefer it when the threshold is high.
 
     Signatures are NOT persisted here (``materialize=False``): this path
-    never re-attaches them after banding, so the only cost is one extra
-    deterministic kernel pass inside the band self-join — the alternative
-    (a persisted signature table whose handle this function would have to
-    discard) leaks a MEMORY_AND_DISK cache per invocation for the life of
-    the session.
+    never re-attaches them after banding, so the plan runs the signature
+    kernel exactly once (under the bucket aggregation) and leaves no
+    cache behind.
     """
     cand, _ = _lsh_candidates(df, id_col, text_col, num_perm=num_perm,
                               bands=bands, seed=seed, materialize=False)
@@ -922,32 +905,35 @@ def dedup_groups(df: DataFrame, id_col: str = "doc_id",
     same doc (min-id policy, matching :func:`exact_dedup`).
 
     Physical strategy is ADAPTIVE on the verified pair count (the same
-    small-side discipline as a broadcast-join threshold): at or below
-    ``driver_cc_max_pairs`` the pair list is collected and components run
-    as one driver-side union-find — the iterative label-propagation path
-    costs O(diameter) Spark jobs, each paying this-scheduler's fixed
-    per-job floor, to converge over a pair set that is tiny by
-    construction (verified near-dups at a high threshold).  Above the
-    threshold the distributed :func:`connected_components` loop runs
-    unchanged (the 100 TB path; ~2M pairs ≈ 10² MB driver ingress is the
-    default ceiling; set ``driver_cc_max_pairs=0`` to force it).
-    Identical output either way (min-label components, parity-tested).
+    small-side discipline as a broadcast-join threshold): one bounded
+    action collects at most ``driver_cc_max_pairs + 1`` verified pairs
+    (the LSH+verify pipeline, signature kernel included, runs once).  At
+    or below the threshold components run as one driver-side union-find
+    and the result is built from a single slice — the iterative
+    label-propagation path costs O(diameter) Spark jobs, each paying the
+    scheduler's fixed per-job floor, to converge over a pair set that is
+    tiny by construction (verified near-dups at a high threshold).  Above
+    the threshold the distributed :func:`connected_components` loop runs
+    over the persisted pair set, so LSH+verify still runs once (the
+    100 TB path; ~2M pairs ≈ 10² MB driver ingress is the default
+    ceiling; set ``driver_cc_max_pairs=0`` to force it).  Identical
+    output either way (min-label components, parity-tested).
     """
-    # persist the verified pair set: the threshold probe and the collect
-    # (or the CC symmetrization + every propagation round) re-read it —
-    # without this the LSH+verify pipeline would re-run per consumer
+    # persist the verified pair set: past the driver threshold the CC
+    # symmetrization and every propagation round re-read it — without
+    # this the LSH+verify pipeline would re-run per consumer
     pairs = verified_near_dups(df, id_col, text_col, shingle_k=shingle_k,
                                jaccard_threshold=jaccard_threshold,
                                num_perm=num_perm, bands=bands,
                                seed=seed).persist()
     if driver_cc_max_pairs:
-        n_pairs = pairs.count()
-        if n_pairs <= driver_cc_max_pairs:
+        # ONE bounded action is both the threshold probe and the collect
+        edges = (pairs.select("doc_a", "doc_b")
+                 .limit(driver_cc_max_pairs + 1).collect())
+        if len(edges) <= driver_cc_max_pairs:
             from pyspark.sql.types import (BooleanType, LongType,
                                            StructField, StructType)
 
-            edges = [(r[0], r[1])
-                     for r in pairs.select("doc_a", "doc_b").collect()]
             pairs.unpersist()
             id_type = df.schema[id_col].dataType
             schema = StructType([
@@ -955,8 +941,9 @@ def dedup_groups(df: DataFrame, id_col: str = "doc_id",
                 StructField("group_id", id_type),
                 StructField("group_size", LongType()),
                 StructField("is_canonical", BooleanType())])
-            out = df.sparkSession.createDataFrame(
-                _components_local(edges), schema)
+            spark = df.sparkSession
+            out = spark.createDataFrame(spark.sparkContext.parallelize(
+                _components_local(edges), 1), schema)
             # persisted handle returned for a uniform cache contract with
             # the distributed path (the caller owns and releases it)
             return out.persist()

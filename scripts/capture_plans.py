@@ -1,14 +1,15 @@
 #!/usr/bin/env python3
 """Capture .explain("formatted") for every bench query DataFrame.
 
-Usage: python scripts/capture_plans_r06.py OUTDIR [SUFFIX]
+Usage: python scripts/capture_plans.py OUTDIR [SUFFIX]
 
 Reconstructs the same DataFrames bench.py times (same operators, same
 parameters, same corpus shape — row count scaled down via
 SPARK_GRAFT_BENCH_ROWS since the physical plan shape is row-count
 independent before AQE runs) and writes OUTDIR/<query>_<SUFFIX>.txt.
-Run from the repo whose plans you want (round-start worktree for
-"before", the optimized tree for "after").
+Run from the repo whose plans you want (the parent checkout for
+"before", the changed tree for "after").  ``SPARK_GRAFT_CPUS`` defaults to
+the host's CPU count; set it to match the run you compare against.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ import sys
 sys.path.insert(0, os.getcwd())
 
 os.environ.setdefault("SPARK_GRAFT_BENCH_ROWS", "60000")
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 OUTDIR = sys.argv[1]
 SUFFIX = sys.argv[2] if len(sys.argv) > 2 else "plan"

@@ -301,10 +301,11 @@ def main() -> None:
     release = []
     if args.near_dedup:
         # pin the surviving corpus AND truncate lineage first: the
-        # LSH->verify->CC pipeline evaluates its input several times
-        # (band branch + two text re-attach branches + CC rounds);
-        # without the cut each evaluation re-runs — and each re-plan
-        # re-inlines — the whole upstream curation chain
+        # LSH->verify pipeline evaluates its input up to three times (the
+        # bucket branch, which runs the signature kernel, and the two
+        # text re-attach branches of the verify; CC reads the persisted
+        # pair set); without the cut each evaluation re-runs — and each
+        # re-plan re-inlines — the whole upstream curation chain
         cur = cur.localCheckpoint()
         bands = args.near_bands if args.near_bands is not None \
             else (8 if args.near_threshold >= 0.85 else 16)

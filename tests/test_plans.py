@@ -131,6 +131,24 @@ def test_lsh_band_join_carries_no_signatures(spark):
         assert "minhash" not in out_cols
 
 
+def test_verified_near_dups_runs_minhash_kernel_once(spark):
+    """LSH buckets form by one aggregation, so the executed verify plan
+    holds exactly two Arrow kernels: the MinHash signatures once (a band
+    self-join plans them on both join sides) and the exact-Jaccard
+    verify."""
+    from hidden_characters_detector_spark.operators import dedup
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").selectExpr(
+        "cast(doc_id as string) doc_id", "text")
+    ver = dedup.verified_near_dups(docs, jaccard_threshold=0.85, bands=8)
+    ver.collect()
+    final = _plan(ver).split("== Initial Plan ==", 1)[0]
+    assert "isFinalPlan=true" in final
+    arrow = [ln for ln in final.splitlines() if "MapInArrow" in ln]
+    assert len(arrow) == 2
+    assert sum("minhash#" in ln for ln in arrow) == 1
+    assert sum("jaccard#" in ln for ln in arrow) == 1
+
+
 def test_sampling_is_zero_shuffle_projection(spark):
     """Deterministic hash sampling must plan as a pure codegen projection
     over the scan — no Exchange, no UDF: at 100 TB a sampling decision
